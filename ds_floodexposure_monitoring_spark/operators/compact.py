@@ -135,10 +135,13 @@ def merge_append(
     # no longer semantically matches the agg's aliased grouping key, and
     # Catalyst would insert a second full-payload exchange (plan-tested).
     part_cols = ["b", "_split"] if any(int(n) > 1 for n in splits.values()) else ["b"]
-    # explicit exchange width from the group count, not the core count —
-    # avoids both the narrow-width sort-agg spill and the wide-width
-    # collision tail (operators/skew.write_exchange_partitions)
-    pre = pre.repartition(write_exchange_partitions(pre, splits), *part_cols)
+    # explicit exchange width from the batch's row estimate and group
+    # count, not the core count: one wave of writer tasks for a small
+    # batch, layout-driven width for a large one
+    # (operators/skew.write_exchange_partitions)
+    pre = pre.repartition(
+        write_exchange_partitions(pre, splits, approx_rows), *part_cols
+    )
     if pu:
         # partial-update fold (operators/dedup.partial_update_state
         # semantics, fused into the same one-shuffle write stage): each
@@ -330,7 +333,7 @@ def compact(
     new_files = table.write_data_files(
         to_write, table.schema(cur), cur["schema_version"], sort_by=table.merge_keys,
         mark_base=(mode == "major"),
-        num_partitions=write_exchange_partitions(to_write, splits),
+        num_partitions=write_exchange_partitions(to_write, splits, rows_before),
     )
     _check_write_consistency(int(obs.get["rows"]), new_files)
 

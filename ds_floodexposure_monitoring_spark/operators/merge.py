@@ -224,9 +224,13 @@ def merge_into(
         part_cols = (
             ["b", "_split"] if any(int(n) > 1 for n in splits.values()) else ["b"]
         )
-        # explicit exchange width from the group count, not the core
+        # explicit exchange width from the rows to resolve (census +
+        # candidate manifest rows) and the group count, not the core
         # count (operators/skew.write_exchange_partitions)
-        pre = pre.repartition(write_exchange_partitions(pre, splits), *part_cols)
+        resolve_rows = sum(n for _, n in merged_counts)
+        pre = pre.repartition(
+            write_exchange_partitions(pre, splits, resolve_rows), *part_cols
+        )
         resolved = (
             pre.groupBy(*part_cols, *keys)
             .agg(

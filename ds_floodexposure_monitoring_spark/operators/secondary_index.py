@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from ..sources.lake import LakeTable
 from .compact import merge_append
 
@@ -150,8 +151,8 @@ def lookup(
     by ``max_keys`` via ``join_pruned``'s loud guard."""
     spark = index.spark
     ival_type = index.schema()[IVAL].dataType
-    probe = spark.createDataFrame(
-        [(v,) for v in values], T.StructType([T.StructField(IVAL, ival_type)])
+    probe = local_frame(
+        spark, [(v,) for v in values], T.StructType([T.StructField(IVAL, ival_type)])
     )
     # postings for the requested values: bucket-pruned index point scan
     hits = index.join_pruned(probe, on=IVAL, how="semi", max_keys=max_keys)

@@ -22,6 +22,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..session import local_frame
 
 
 def plan_bucket_splits(
@@ -66,7 +69,6 @@ def with_salted_split(
       remains only for a pathological many-distinct-hot-buckets profile
       at very large n_buckets.
     """
-    spark = df.sparkSession
     values = set(int(n) for n in splits.values())
     if values <= {1}:
         return df.withColumn("_split", F.lit(0).cast("int"))
@@ -83,20 +85,64 @@ def with_salted_split(
         )
         return df.withColumn("_split", F.pmod(salt, n_splits).cast("int"))
     splits_df = F.broadcast(
-        spark.createDataFrame(
-            [(int(b), int(n)) for b, n in splits.items()], f"{bucket_col} int, _n_splits int"
+        local_frame(
+            df.sparkSession,
+            [(int(b), int(n)) for b, n in splits.items()],
+            T.StructType([
+                T.StructField(bucket_col, T.IntegerType()),
+                T.StructField("_n_splits", T.IntegerType()),
+            ]),
         )
     )
     df = df.join(splits_df, on=bucket_col, how="left").na.fill({"_n_splits": 1})
     return df.withColumn("_split", F.pmod(salt, F.col("_n_splits")).cast("int")).drop("_n_splits")
 
 
-def write_exchange_partitions(df: DataFrame, splits: dict[int, int]) -> int:
+# Rows a writer task must carry before one more task pays for itself.
+# A Python-worker task costs ~0.24 s before any user code runs
+# (bench/python_task_cost.py: no-op mapInArrow at 4 vs 16 tasks on a
+# 4-vCPU host), and the apply works at ~12 us (merge_append) to ~18 us
+# (compact) of executor CPU per row (traced replay_mor, same host). At
+# 200k rows a task's fixed cost stays near a tenth of its row work.
+ROWS_PER_WRITE_TASK = 200_000
+
+
+def write_exchange_partitions(
+    df: DataFrame, splits: dict[int, int], rows: int | None
+) -> int:
     """Shuffle-partition count for the one-exchange write path.
 
-    The write exchange hashes G = sum(splits) (bucket, split) groups into
-    the session's default shuffle-partition count (~2x cores). Two
-    failure modes at that count, both measured on the scaling bench:
+    Every partition of this exchange is a ``mapInArrow`` writer task
+    (sources/lake.write_data_files), and a Python-worker task has a
+    fixed cost that does not depend on its rows: ~0.24 s on a 4-vCPU
+    host (bench/python_task_cost.py), against ~0.006 s for a JVM-only
+    task. Most of it is ``importlib.invalidate_caches()`` in the
+    worker's per-task set-up (pyspark/worker_util.py), which makes each
+    zipimporter on the worker's path re-read its archive's index on
+    every task: 16 importers over pyspark.zip (1,328 entries), the py4j
+    zip and the spark-core jar (5,359 entries), ~0.2 s per call measured
+    inside a task. So a task only earns its place by the rows it
+    carries; the cost model per reduce stage is
+
+        wall ≈ waves x 0.24 s + rows x c_row / min(tasks, cores)
+
+    with waves = ceil(tasks / cores). Below ``cores`` tasks, each extra
+    task buys parallelism for free (its fixed cost runs beside the
+    others); past ``cores``, each extra wave adds 0.24 s and no
+    parallelism. Hence, with ``rows`` the caller's estimate (known
+    without a Spark job — changelog metadata, census and manifest
+    counts):
+
+        clamp(ceil(rows / ROWS_PER_WRITE_TASK), min(groups, cores), widest)
+
+    so a small batch writes in ONE wave, and only a batch large enough
+    that per-task rows (memory, sort-agg spill) matter more than the
+    fixed cost widens toward the layout-driven ``widest``.
+    ``rows=None`` (no estimate) keeps ``widest``.
+
+    ``widest`` is the width from the table layout: the exchange hashes
+    G = sum(splits) (bucket, split) groups, and two failure modes at the
+    session default (~2x cores), both measured on the scaling bench:
 
     - G > partitions: several whole groups pile into one reduce task,
       whose rows then exceed the sort-agg's in-memory budget at narrow
@@ -107,23 +153,19 @@ def write_exchange_partitions(df: DataFrame, splits: dict[int, int]) -> int:
       (many waves smooth it), a direct wall tax at wide widths where the
       reduce stage is one or two waves deep.
 
-    A partition can always be left empty cheaply-ISH — but on this
-    write path every partition (empty included) is a mapInArrow task
-    with a Python-worker roundtrip, so gratuitous over-partitioning has
-    a real floor cost (measured: the 16.8M-event replay lost ~25% when
-    64 groups ran at 128 partitions). So over-partition 4x ONLY when
-    the reduce stage would be shallow (groups < 4x cores, where a
-    collision tail is exposed directly in the stage wall); with >= 4
-    waves per core the tail averages out and the exchange runs at
-    exactly the group count. Floored by the session default either way.
-    On a real cluster the write-task count follows the table layout
-    (Iceberg's write distribution), growing with n_buckets, so
-    production sits in the many-waves branch.
+    So ``widest`` over-partitions 4x ONLY when the reduce stage would
+    be shallow (groups < 4x cores); with >= 4 waves per core the tail
+    averages out and it is exactly the group count. Floored by the
+    session default either way. On a real cluster the write-task count
+    follows the table layout (Iceberg's write distribution), growing
+    with n_buckets, so production sits in the many-waves branch.
     """
     spark = df.sparkSession
     base = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cores = spark.sparkContext.defaultParallelism
     groups = sum(splits.values()) or 1
-    if groups >= 4 * cores:
-        return max(groups, base)
-    return max(4 * groups, base)
+    widest = max(groups, base) if groups >= 4 * cores else max(4 * groups, base)
+    if rows is None:
+        return widest
+    by_rows = -(-rows // ROWS_PER_WRITE_TASK)
+    return max(min(groups, cores), min(by_rows, widest))

@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -93,3 +94,35 @@ def _parse_local_threads(master: str) -> int | None:
         return int(inner)
     except ValueError:
         return None
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A driver-side row list as a DataFrame that no Python worker touches.
+
+    ``createDataFrame(list)`` parallelizes the rows into a Python RDD, so
+    any job over it runs ``defaultParallelism`` Python tasks, each paying
+    the worker's fixed start cost (operators/skew.write_exchange_partitions)
+    to emit a handful of rows. An Arrow table reaches the JVM as a local
+    relation instead (below ``spark.sql.execution.arrow.localRelationThreshold``;
+    above it, as a JVM RDD of Arrow batches — still no Python worker): a
+    projection over it (the bucket of each lookup key) is folded into
+    the relation and collected with no job at all, and joined into a
+    bigger plan it is a broadcastable leaf. Rows are checked against
+    ``schema`` exactly as ``createDataFrame`` checks them, so a value of
+    the wrong type is rejected the same way, and a string field stores
+    any other value as its ``str()``, as it does there."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier
+
+    verify = _make_type_verifier(schema)
+    for r in rows:
+        verify(r)
+    arrow_schema = to_arrow_schema(schema)
+    columns = []
+    for i, f in enumerate(schema.fields):
+        values = [r[i] for r in rows]
+        if isinstance(f.dataType, T.StringType):
+            values = [v if v is None or isinstance(v, str) else str(v) for v in values]
+        columns.append(pa.array(values, type=arrow_schema.field(i).type))
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow_schema), schema)

@@ -88,11 +88,13 @@ def test_many_hot_buckets_falls_back_to_broadcast_join(spark):
 
 
 def test_write_exchange_partitions_sizing(spark):
-    """Layout-driven exchange width: 4x over-partition only when the
-    reduce stage would be shallow (groups < 4x cores); exact group
-    count when waves are plentiful; always floored by the session
-    default."""
+    """Row-driven exchange width: a small row estimate writes in one
+    wave of min(groups, cores) tasks; a large one gets the layout-driven
+    width (4x over-partition when the reduce stage would be shallow,
+    exactly the group count when waves are plentiful, floored by the
+    session default); in between, ceil(rows / ROWS_PER_WRITE_TASK)."""
     from ds_floodexposure_monitoring_spark.operators.skew import (
+        ROWS_PER_WRITE_TASK,
         write_exchange_partitions,
     )
 
@@ -100,7 +102,21 @@ def test_write_exchange_partitions_sizing(spark):
     cores = spark.sparkContext.defaultParallelism
     base = int(spark.conf.get("spark.sql.shuffle.partitions"))
     shallow = {b: 1 for b in range(max(1, cores))}  # groups < 4*cores
-    assert write_exchange_partitions(df, shallow) == max(4 * len(shallow), base)
     deep = {b: 1 for b in range(8 * cores)}  # groups >= 4*cores
-    assert write_exchange_partitions(df, deep) == max(8 * cores, base)
-    assert write_exchange_partitions(df, {}) >= base
+
+    # small estimate: one wave, never more tasks than groups or cores
+    assert write_exchange_partitions(df, shallow, 1_000) == min(len(shallow), cores)
+    assert write_exchange_partitions(df, deep, 1_000) == cores
+    assert write_exchange_partitions(df, deep, 0) == cores
+    assert write_exchange_partitions(df, {0: 1}, 1_000) == 1
+
+    # large estimate (or none): the layout-driven widths
+    for rows in (10**12, None):
+        assert write_exchange_partitions(df, shallow, rows) == max(4 * len(shallow), base)
+        assert write_exchange_partitions(df, deep, rows) == max(8 * cores, base)
+    assert write_exchange_partitions(df, {}, None) >= base
+
+    # in between: one task per ROWS_PER_WRITE_TASK rows
+    n = cores + 1
+    assert write_exchange_partitions(df, deep, n * ROWS_PER_WRITE_TASK) == n
+    assert write_exchange_partitions(df, deep, n * ROWS_PER_WRITE_TASK + 1) == n + 1
