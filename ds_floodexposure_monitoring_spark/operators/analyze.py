@@ -4,15 +4,13 @@ no data file is ever rewritten.
 
 Two gaps this closes:
 
-1. **Legacy / JVM-written files.** The Arrow task writer accumulates
-   exact per-file stats streaming (bounds, integral sums, tombstone
-   counts, key blooms), but the JVM write path derives its manifest
-   entries from parquet FOOTERS (sources/lake.py _make_footer_reader),
-   which cannot prove sums at all, cannot prove tombstone counts for
-   mixed row groups, and carries no bloom. Every metadata-pushdown
-   answer (``count_rows``, ``col_sum``, ``col_bounds``,
-   ``partition_col_sums``) and every bloom-pruned lookup then falls
-   back conservatively forever.
+1. **Legacy manifests.** The Arrow task writer accumulates exact
+   per-file stats streaming (bounds, integral sums, tombstone counts,
+   key blooms), but manifests written before it tracked them carry
+   none: no sums, no tombstone counts, no bloom. Every
+   metadata-pushdown answer (``count_rows``, ``col_sum``,
+   ``col_bounds``, ``partition_col_sums``) and every bloom-pruned
+   lookup then falls back conservatively forever.
 2. **Stats evolution.** ``stat_cols``/``key_bloom_bits`` are fixed at
    CREATE; a table that later needs range pruning or SUM pushdown on a
    new column had no path to it (Iceberg: ``ALTER TABLE ... SET`` write
@@ -21,19 +19,18 @@ Two gaps this closes:
 ``set_stat_cols`` is the DDL half: one metadata commit changes the
 tracked set; every FUTURE write accumulates the new stats. ``analyze``
 is the backfill half: one distributed pass over exactly the DEFICIENT
-files (``sc.parallelize(...).map`` — the established footer-collection
-dispatch, one tiny JSON per file back to the driver), then ONE
-metadata-swap commit re-adding the same paths with completed entries
-(``commit_retrying(validation='rewrite')`` — concurrent ingest to other
-buckets carries over; a concurrent rewrite of an analyzed file re-plans
-loudly). Old snapshots still reference the same physical files, so time
+files (``sc.parallelize(...).map``, one tiny JSON per file back to
+the driver), then ONE metadata-swap commit re-adding the same paths
+with completed entries (``commit_retrying(validation='rewrite')`` —
+concurrent ingest to other buckets carries over; a concurrent rewrite
+of an analyzed file re-plans loudly). Old snapshots still reference the same physical files, so time
 travel, rollback and vacuum semantics are untouched.
 
 Exactness: stats describe the file's STORED rows, the same contract the
 writer keeps — bounds skip nulls like parquet footer stats, sums are
 python-int exact and recorded only for INTEGRAL columns, tombstone
-counts come from the data itself (exact even where footer min/max could
-not prove a mixed row group), and a column physically absent from an
+counts come from the data itself (exact even where footer min/max cannot
+prove a mixed row group), and a column physically absent from an
 old file (added by later schema evolution) is all-null by alignment, so
 its sum entry is exactly ``[0, 0]`` — analyze can prove what the
 original writer could not yet know.
@@ -164,8 +161,8 @@ def _make_file_analyzer(
     key_bloom_int: bool,
 ):
     """Executor-side per-file stats pass (self-contained closure, same
-    discipline as the task writer / footer reader: cloudpickle ships it
-    by value so it runs without --py-files)."""
+    discipline as the task writer: cloudpickle ships it by value so it
+    runs without --py-files)."""
 
     def analyze_file(meta: dict) -> dict:
         import base64 as _b64

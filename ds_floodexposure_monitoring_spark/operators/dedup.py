@@ -6,15 +6,11 @@ The reference's analog: the Postgres upsert overwrites the prior row for
 UNIQUE key at src/utils/database.py:42-52). Generalized here to
 "keep the newest writer per (conv_id, turn_idx) by LSN".
 
-Two strategies, same semantics:
-
-- ``"agg"`` (default): ``groupBy(keys).agg(max_by(struct(payload),
-  order))``. This gets a *map-side partial aggregation* before the
-  shuffle — at 100 TB with a meaningful duplicate rate it moves far
-  fewer bytes than a window, and there is no per-partition sort.
-- ``"window"``: ``row_number() over (partition by keys order by order
-  desc) = 1`` — the textbook form; kept for parity/testing and for
-  callers that need losing rows too.
+The plan is ``groupBy(keys).agg(max_by(struct(payload), order))``, not
+the textbook ``row_number() over (partition by keys order by order
+desc) = 1``: the aggregate gets a *map-side partial aggregation* before
+the shuffle — at 100 TB with a meaningful duplicate rate it moves far
+fewer bytes than a window, and there is no per-partition sort.
 
 Skew note: the dedup key *includes* ``turn_idx``, so a hot conversation
 hashes across many reducers already (SURVEY.md §7.3); no salting is
@@ -28,14 +24,12 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def dedup_last_writer(
     df: DataFrame,
     keys: Sequence[str] = ("conv_id", "turn_idx"),
     order_cols: Sequence[str] = ("lsn",),
-    strategy: str = "agg",
 ) -> DataFrame:
     """One row per key: the one greatest under ``order_cols`` ordering.
 
@@ -46,20 +40,11 @@ def dedup_last_writer(
     keys = list(keys)
     order_cols = list(order_cols)
     payload = [c for c in df.columns if c not in keys]
-    if strategy == "agg":
-        ordering = F.struct(*[F.col(c) for c in order_cols])
-        agg = df.groupBy(*keys).agg(
-            F.max_by(F.struct(*[F.col(c) for c in payload]), ordering).alias("_w")
-        )
-        return agg.select(*keys, *[F.col(f"_w.{c}").alias(c) for c in payload])
-    if strategy == "window":
-        w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_cols])
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    raise ValueError(f"unknown strategy {strategy!r}")
+    ordering = F.struct(*[F.col(c) for c in order_cols])
+    agg = df.groupBy(*keys).agg(
+        F.max_by(F.struct(*[F.col(c) for c in payload]), ordering).alias("_w")
+    )
+    return agg.select(*keys, *[F.col(f"_w.{c}").alias(c) for c in payload])
 
 
 def partial_update_state(

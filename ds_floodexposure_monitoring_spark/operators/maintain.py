@@ -16,7 +16,8 @@ the plan in dependency order —
    so analyze never wastes a pass on files about to be replaced and
    compaction's own Arrow writer emits complete stats;
 2. **analyze** second, backfilling whatever is STILL deficient
-   (JVM-written files, pre-DDL files) with a metadata-swap commit;
+   (legacy manifests, files written before a ``set_stat_cols``) with a
+   metadata-swap commit;
 3. **expire** last, physically deleting the files steps 1-2 replaced.
 
 The planner is O(files) driver work with zero data I/O and zero Spark

@@ -26,8 +26,8 @@ Physical plan, built for 100 TB:
    wins LSN ties (MERGE matched ⇒ update).
 3. **Rewrite**: winners leave the resolve already salted-split per
    bucket (operators/skew.py) so hot conversations fan out over
-   multiple write tasks/files, and are written ``partitionBy(bucket)``
-   task-local; per-file key stats ride back as task results
+   multiple write tasks/files, and are written one file per bucket a
+   task holds, task-local; per-file key stats ride back as task results
    (Iceberg-writer style — sources/lake._make_task_writer).
 4. **Commit**: atomic snapshot swap carrying the batch_id (exactly-once
    anchor, streaming/checkpoint.py).

@@ -65,9 +65,7 @@ def _msum(c: str):
 def lww_state(spark: SparkSession, sf: str) -> DataFrame:
     # project BEFORE dedup: pruning cannot reach inside the max_by struct
     ev = table(spark, sf, "events").select("user_id", "event_type", "value", "ts", "event_id")
-    out = dedup_last_writer(
-        ev, keys=("user_id", "event_type"), order_cols=("event_id",), strategy="agg"
-    )
+    out = dedup_last_writer(ev, keys=("user_id", "event_type"), order_cols=("event_id",))
     return out.select(
         "user_id",
         "event_type",
@@ -1471,17 +1469,18 @@ def quality_audit(spark: SparkSession, sf: str) -> DataFrame:
     FROM documents
     """,
     note="ANALYZE TABLE analog (operators/analyze.py): the corpus is "
-         "staged through the JVM writer, whose manifests are footer-"
-         "derived — no sums, no manifest blooms, tombstones only where "
-         "footers prove them — so col_sum() correctly answers None; ONE "
+         "staged into a table created WITHOUT stat columns, so its "
+         "manifests carry no n_chars sums and col_sum() correctly "
+         "answers None; set_stat_cols (one metadata commit) then ONE "
          "distributed stats pass over exactly the deficient files + ONE "
-         "metadata-swap commit (same paths, no data rewritten) then "
-         "makes the manifest fold exact, and the query returns the "
+         "metadata-swap commit (same paths, no data rewritten) makes "
+         "the manifest fold exact, and the query returns the "
          "post-analyze metadata answer. The adoption story at 100 TB: "
-         "run analyze once over an existing parquet estate and every "
-         "metadata-only answer (count_rows / col_sum / col_bounds / "
-         "bloom point-lookup) lights up. The query RAISES if analyze "
-         "failed to make the path provable",
+         "run analyze once after a stats-config change (or over an "
+         "existing parquet estate) and every metadata-only answer "
+         "(count_rows / col_sum / col_bounds / bloom point-lookup) "
+         "lights up. The query RAISES if analyze failed to make the "
+         "path provable",
 )
 def analyze_stats_backfill(spark: SparkSession, sf: str) -> DataFrame:
     import hashlib
@@ -1490,7 +1489,7 @@ def analyze_stats_backfill(spark: SparkSession, sf: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    from ..operators.analyze import analyze
+    from ..operators.analyze import analyze, set_stat_cols
     from ..operators.compact import compact, merge_append
     from ..sources.lake import LakeTable
 
@@ -1506,24 +1505,16 @@ def analyze_stats_backfill(spark: SparkSession, sf: str) -> DataFrame:
         ]),
         merge_keys=("doc_id",),
         n_buckets=4,
-        stat_cols=("n_chars",),
     )
     d = table(spark, sf, "documents").select(
         "doc_id",
         F.length("text").cast("int").alias("n_chars"),
         F.lit(1).cast("long").alias("lsn"),
     )
-    prev = os.environ.get("SPARK_GRAFT_WRITER")
-    os.environ["SPARK_GRAFT_WRITER"] = "jvm"
-    try:
-        merge_append(t, d, batch_id="anlz-1")
-        compact(t, min_files_per_bucket=1)
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_WRITER", None)
-        else:
-            os.environ["SPARK_GRAFT_WRITER"] = prev
-    assert t.col_sum("n_chars") is None, "footer manifests can't prove sums"
+    merge_append(t, d, batch_id="anlz-1")
+    compact(t, min_files_per_bucket=1)
+    assert t.col_sum("n_chars") is None, "untracked column can't prove sums"
+    set_stat_cols(t, ("n_chars",))
     analyze(t)
     s = t.col_sum("n_chars")
     n = t.count_rows()
@@ -3034,7 +3025,6 @@ def debezium_decode_lww(spark: SparkSession, sf: str) -> DataFrame:
         dec.where(~F.col("_corrupt")).drop("_corrupt"),
         keys=("user_id", "event_type"),
         order_cols=("_lsn",),
-        strategy="agg",
     )
     return state.where(~F.col("_tombstone")).select(
         "user_id",
@@ -3113,7 +3103,6 @@ def maxwell_decode_state(spark: SparkSession, sf: str) -> DataFrame:
         dec.where(~F.col("_corrupt")).drop("_corrupt"),
         keys=("user_id", "event_type"),
         order_cols=("_lsn",),
-        strategy="agg",
     )
     return state.where(~F.col("_tombstone")).select(
         "user_id",

@@ -41,9 +41,7 @@ FLAGSHIP_SQL = """
 def flagship(spark: SparkSession, sf: str) -> DataFrame:
     # project before dedup so the parquet scan prunes unused columns
     ev = table(spark, sf, "events").select("user_id", "event_type", "value", "ts", "event_id")
-    lww = dedup_last_writer(
-        ev, keys=("user_id", "event_type"), order_cols=("event_id",), strategy="agg"
-    )
+    lww = dedup_last_writer(ev, keys=("user_id", "event_type"), order_cols=("event_id",))
     daily = lww.groupBy("event_type", F.date_trunc("day", "ts").alias("day")).agg(
         F.count("*").alias("n"),
         F.sum(F.col("value").cast("decimal(18,2)")).alias("total"),

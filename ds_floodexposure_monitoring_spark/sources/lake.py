@@ -115,8 +115,8 @@ class DataFile:
     # exact count of tombstone (delete-marker) rows in this file —
     # Iceberg's per-manifest delete-count analog. Lets metadata answer
     # live-row counts on resolved snapshots (count_rows): live =
-    # rows - tombstones, zero data I/O. None = unknown (legacy files;
-    # jvm-writer files whose footer stats can't prove the count) —
+    # rows - tombstones, zero data I/O. None = unknown (legacy manifests
+    # written before the writer counted them; ``analyze`` backfills) —
     # consumers must then fall back to a scan.
     tombstones: int | None = None
     # base64 bloom filter over this file's first-merge-key values
@@ -134,7 +134,8 @@ class DataFile:
     # last ulp; integer sums are exact and overflow-free driver-side).
     # Drives SUM aggregate pushdown (col_sum) — the additive sibling of
     # col_stats min/max. None / missing column = unknown (legacy files,
-    # non-integral or footer-derived entries) — consumers fall back.
+    # non-integral columns, columns added to stat_cols after the file
+    # was written) — consumers fall back.
     col_sums: dict | None = None
 
     def to_json(self) -> dict:
@@ -573,143 +574,6 @@ def _bloom_might_contain(raw: bytes, h: int) -> bool:
     return True
 
 
-def _dedupe_task_attempts(paths: list[str]) -> list[str]:
-    """Drop duplicate task-attempt outputs before manifest-building
-    (jvm writer mode only; the arrow mode is structurally immune).
-
-    Under fileoutputcommitter v2 a task attempt that commits and is then
-    re-executed (stage retry, speculation, lost task result) can leave
-    TWO part files for the same task partition in the same directory —
-    ``part-00007-<uuidA>…`` and ``part-00007-<uuidB>…``. Both hold the
-    identical rows (the write plan is deterministic per partition), so
-    keep exactly one per (directory, part index) — smallest name, for
-    determinism — and delete the extras now rather than leaving them as
-    orphans. Genuine corruption (extra rows NOT explained by a
-    duplicated attempt) still trips the downstream row-count
-    consistency guard (operators/merge._check_write_consistency)."""
-    keep: dict[tuple[str, str], str] = {}
-    for p in sorted(paths):
-        name = os.path.basename(p)
-        part = name.split("-")[1] if name.startswith("part-") else name
-        keep.setdefault((os.path.dirname(p), part), p)
-    kept = set(keep.values())
-    for p in paths:
-        if p not in kept:
-            os.remove(p)
-    return sorted(kept)
-
-
-def _make_footer_reader(
-    table_root: str, key0: str, stat_cols: list[str], schema_version: int
-):
-    """Executor-side parquet footer → manifest-entry dict (jvm writer
-    mode). Self-contained closure (same pickling rationale as
-    _make_task_writer): no module-global references, so it runs on
-    Python workers even without --py-files/PYTHONPATH."""
-
-    def read_footer(fpath: str) -> dict | None:
-        import datetime as _dt
-        import os as _os
-
-        import pyarrow.parquet as pq
-
-        _epoch = _dt.datetime(1970, 1, 1)
-
-        def _scal(v):
-            if isinstance(v, _dt.datetime):
-                if v.tzinfo is not None:
-                    v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-                return (v - _epoch) // _dt.timedelta(microseconds=1)
-            if isinstance(v, bytes):
-                try:
-                    return v.decode("utf-8")
-                except UnicodeDecodeError:
-                    return None  # binary stats: no usable bound
-            return v
-
-        md = pq.ParquetFile(fpath).metadata
-        if md.num_rows == 0:
-            _os.remove(fpath)
-            return None
-
-        def col_minmax(name: str):
-            ix = next(
-                (i for i in range(md.num_columns) if md.schema.column(i).name == name),
-                None,
-            )
-            if ix is None:
-                return None
-            mn = mx = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(ix).statistics
-                if st is None or not st.has_min_max:
-                    return None  # no bounds -> file can never be skipped
-                mn = st.min if mn is None else min(mn, st.min)
-                mx = st.max if mx is None else max(mx, st.max)
-            return _scal(mn), _scal(mx)
-
-        def tombstone_count():
-            """Exact tombstone count when the footer can prove it, else
-            None (unknown). Null tombstone = live row; min/max footer
-            stats on the boolean column prove all-false / all-true row
-            groups exactly — the mixed case is unprovable from stats."""
-            ix = next(
-                (
-                    i
-                    for i in range(md.num_columns)
-                    if md.schema.column(i).name == "_tombstone"
-                ),
-                None,
-            )
-            if ix is None:
-                return 0  # column never written: no tombstones
-            total = 0
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                st = g.column(ix).statistics
-                if st is None or st.null_count is None:
-                    return None
-                non_null = g.num_rows - st.null_count
-                if non_null == 0:
-                    continue
-                if not st.has_min_max:
-                    return None
-                if st.max is False:
-                    continue
-                if st.min is True:
-                    total += non_null
-                else:
-                    return None  # mixed true/false row group: unprovable
-            return total
-
-        rel = _os.path.relpath(fpath, table_root)
-        bucket = int(rel.split("b=")[1].split("/")[0])
-        part = None
-        if "/_p=" in rel:
-            raw = rel.split("/_p=")[1].split("/")[0]
-            if raw != "__HIVE_DEFAULT_PARTITION__":
-                part = int(raw) if raw.lstrip("-").isdigit() else raw
-        kb = col_minmax(key0)
-        col_stats = {}
-        for c in stat_cols:
-            b = col_minmax(c)
-            if b is not None and b[0] is not None:
-                col_stats[c] = [b[0], b[1]]
-        return {
-            "path": rel,
-            "bucket": bucket,
-            "rows": md.num_rows,
-            "min_key": kb[0] if kb else None,
-            "max_key": kb[1] if kb else None,
-            "schema_version": schema_version,
-            "col_stats": col_stats or None,
-            "part": part,
-            "tombstones": tombstone_count(),
-        }
-
-    return read_footer
-
-
 def _make_task_writer(
     out_dir: str,
     table_root: str,
@@ -727,18 +591,15 @@ def _make_task_writer(
     Each task writes its partition's rows as one parquet file per bucket
     it holds and RETURNS the per-file manifest entry (path, rows, min/max
     key, stat-col bounds) as its task result — the Iceberg-writer
-    pattern where data-file stats ride back in task commit messages.
-    Compared to the old shape (JVM ``df.write.parquet`` + a driver-side
-    glob + footer-read ThreadPool):
+    pattern where data-file stats ride back in task commit messages:
 
-    - **No driver I/O proportional to file count.** On object storage at
-      10^10-row scale, per-batch driver footer GETs are the ingest
-      ceiling; here the driver only receives one tiny JSON row per file.
-    - **Exactly-once manifests for free.** Spark returns each
-      partition's result from exactly ONE successful task attempt, so a
-      retried/speculated attempt can never double-enter the manifest —
-      its stray file is unreferenced and vacuumed by expire_snapshots.
-      (The old path needed part-index dedup plus a row-count guard.)
+    - **No driver I/O proportional to file count.** The driver never
+      lists the written directories or reads a footer; it receives one
+      tiny JSON row per file.
+    - **Exactly-once manifests.** Spark returns each partition's result
+      from exactly ONE successful task attempt, so a retried/speculated
+      attempt can never double-enter the manifest — its stray file is
+      unreferenced and vacuumed by expire_snapshots.
     - **Stats are exact**, computed streaming over the Arrow batches
       (nulls skipped, like parquet footer stats). A column with no
       non-null values gets NULL bounds = conservatively never skipped.
@@ -761,11 +622,12 @@ def _make_task_writer(
     Identity-partition directory names are Hive/Iceberg-escaped
     (percent-encoding of path-hostile characters) so a string value
     containing ``/`` or ``=`` cannot corrupt the layout; bytes values
-    are normalized like the footer reader. The number of concurrently
-    open parquet writers per task is capped (Iceberg fanout-writer
-    style): on overflow the least-recently-fed (bucket, partition) file
-    is closed and its manifest entry recorded — a re-appearing key
-    simply opens a second file, which the manifest supports.
+    are normalized like manifest stats (_stat_scalar). The number of
+    concurrently open parquet writers per task is capped (Iceberg
+    fanout-writer style): on overflow the least-recently-fed (bucket,
+    partition) file is closed and its manifest entry recorded — a
+    re-appearing key simply opens a second file, which the manifest
+    supports.
 
     ``key_bloom_bits`` (0 = off): additionally accumulate a bloom
     filter over the file's ``key0`` values (vectorized: one pandas
@@ -918,7 +780,7 @@ def _make_task_writer(
                 # Hive/Iceberg-style escaping: percent-encode everything
                 # outside [A-Za-z0-9_.-] so '/', '=', '%', ':' etc. in a
                 # string identity-partition value cannot break the layout;
-                # bytes normalize through _scal like the footer reader.
+                # bytes normalize through _scal like manifest stats.
                 safe = (
                     "__null__"
                     if pv is None
@@ -1326,7 +1188,7 @@ class LakeTable:
         O(files) driver time. Falls back to the distributed resolved
         scan when the snapshot has unresolved MOR deltas (physical rows
         double-count superseded versions) or when any file's tombstone
-        count is unknown (legacy manifest / unprovable jvm footer)."""
+        count is unknown (legacy manifest not yet analyzed)."""
         snap = self.current() if version is None else self.snapshot(version)
         if not snap.get("requires_resolve", False):
             fs = self.files(snap)
@@ -1482,12 +1344,13 @@ class LakeTable:
         Returns the sum, or ``None`` whenever metadata cannot PROVE it:
         unresolved MOR deltas, tombstoned rows, any file without a
         proven entry for the column (legacy manifests, files written
-        before the column existed, footer-derived entries), a
-        partial-update merge engine (stored cell ≠ resolved cell), or
-        zero non-null values anywhere (SQL ``SUM`` is NULL there — the
-        scan fallback agrees). Restricted to INTEGRAL columns: float
-        addition is order-dependent, so a metadata fold could disagree
-        with a scan in the last ulp; an integer fold cannot."""
+        before the column existed or was a stat column, until
+        ``analyze``), a partial-update merge engine (stored cell ≠
+        resolved cell), or zero non-null values anywhere (SQL ``SUM``
+        is NULL there — the scan fallback agrees). Restricted to
+        INTEGRAL columns: float addition is order-dependent, so a
+        metadata fold could disagree with a scan in the last ulp; an
+        integer fold cannot."""
         field = next(
             (x for x in self.schema().fields if x.name == col), None
         )
@@ -2932,27 +2795,6 @@ class LakeTable:
         shuffle here. ``num_partitions``: the exchange width to use when
         this method does the exchange (compaction); without it, the
         session default.
-
-        Two writer modes (``SPARK_GRAFT_WRITER``; both keep the driver
-        free of per-file I/O — the property that matters at 10^10 rows):
-
-        - ``"arrow"`` (default): a self-contained ``mapInArrow`` task
-          writer returns each file's manifest entry as its task result
-          — the Iceberg-writer task-commit-message pattern: zero
-          listing, and structurally exactly-once manifests (a retried
-          attempt's file is never referenced). Measured AT LEAST as
-          fast as the JVM path on the 8M-row write microbench
-          (1.40-1.66M vs 1.30-1.42M ev/s warm at local[8]) — pyarrow's
-          writer offsets the extra Arrow IPC pass, and it skips the
-          dynamic-partition committer + listing + footer job.
-        - ``"jvm"``: Tungsten's native parquet writer (``partitionBy``),
-          then per-file stats read from the footers by a second tiny
-          DISTRIBUTED job (``parallelize(paths) → footer read``) — the
-          driver does one directory listing and receives one small dict
-          per file. Data never leaves the JVM; the fallback if a
-          deployment forbids Python workers on the write path. This
-          mode does not produce manifest key blooms (key_bloom_bits);
-          point-lookup pruning falls back to bucket+range only.
         """
         commit_dir = f"data/c{uuid.uuid4().hex[:12]}"
         key0 = self.merge_keys[0]
@@ -2993,46 +2835,34 @@ class LakeTable:
             # group min/max stats, so point lookups prune at row-group
             # granularity, not just file granularity. The hot ingest
             # path skips this — deltas stay write-fast. Partition value
-            # leads the sort so the JVM writer's required dynamic-
-            # partition ordering (b, _p) is satisfied by prefix and no
-            # second (key-order-destroying) sort is inserted.
+            # leads the sort so a task feeds one (b, _p) file at a time:
+            # the writer's open-file cap never splits a file.
             to_write = to_write.sortWithinPartitions(
                 *(["b", "_p"] if pspec else ["b"]), *sort_by
             )
 
-        mode = os.environ.get("SPARK_GRAFT_WRITER", "arrow")
         # AQE adds a driver-side re-plan round trip per materialized
         # exchange, and this job's one exchange is already sized
         # explicitly from the data layout (write_exchange_partitions) —
         # AQE has nothing to decide here and its stage materialization
         # costs a consistent ~5% of replay wall (same-epoch A/B: 906K
         # vs 838K ev/s on the 16.8M-event replay). Disabled around the
-        # write action only, prior value restored; opt out with
-        # SPARK_GRAFT_WRITE_AQE=on (e.g. if a shared session runs
-        # concurrent queries on other threads).
+        # write action only, prior value restored.
         aqe_key = "spark.sql.adaptive.enabled"
         prev_aqe = self.spark.conf.get(aqe_key)
-        toggle = os.environ.get("SPARK_GRAFT_WRITE_AQE", "off") == "off"
-        if toggle:
-            self.spark.conf.set(aqe_key, "false")
+        self.spark.conf.set(aqe_key, "false")
         try:
-            if mode == "arrow":
-                metas = to_write.mapInArrow(
-                    _make_task_writer(
-                        commit_dir, self.path, key0, stat_cols, schema_version,
-                        partitioned=bool(pspec), key_bloom_bits=kb_bits,
-                        key_bloom_int=kb_int,
-                    ),
-                    schema="meta string",
-                ).collect()
-                files = [DataFile.from_json(json.loads(r["meta"])) for r in metas]
-            else:
-                files = self._write_jvm(
-                    to_write, commit_dir, key0, stat_cols, schema_version, bool(pspec)
-                )
+            metas = to_write.mapInArrow(
+                _make_task_writer(
+                    commit_dir, self.path, key0, stat_cols, schema_version,
+                    partitioned=bool(pspec), key_bloom_bits=kb_bits,
+                    key_bloom_int=kb_int,
+                ),
+                schema="meta string",
+            ).collect()
         finally:
-            if toggle:
-                self.spark.conf.set(aqe_key, prev_aqe)
+            self.spark.conf.set(aqe_key, prev_aqe)
+        files = [DataFile.from_json(json.loads(r["meta"])) for r in metas]
         import dataclasses as _dc
 
         if pspec:
@@ -3049,50 +2879,3 @@ class LakeTable:
             # so minor compaction exempts exactly them (DataFile.base)
             files = [_dc.replace(f, base=True) for f in files]
         return files
-
-    def _write_jvm(
-        self,
-        to_write: DataFrame,
-        commit_dir: str,
-        key0: str,
-        stat_cols: list[str],
-        schema_version: int,
-        partitioned: bool,
-    ) -> list[DataFile]:
-        """JVM-native write + distributed footer-stat collection (see
-        write_data_files). Driver I/O: one recursive listing of the
-        fresh commit directory (one LIST call per commit on an object
-        store) + receipt of one small manifest dict per file."""
-        import glob as _glob
-
-        out_dir = os.path.join(self.path, commit_dir)
-        part_cols = ["b", "_p"] if partitioned else ["b"]
-        (
-            to_write.write.mode("overwrite")
-            # parquet bloom filter on the first merge key: point lookups
-            # (prune_for_keys -> scan) skip row groups whose bloom
-            # rejects the key — the in-format Iceberg/Delta bloom analog,
-            # most valuable on unsorted MOR delta files where min/max
-            # ranges span the bucket's whole key space. (The arrow
-            # writer can't emit blooms yet — pyarrow 16 has no write
-            # support — so this rides the jvm mode only.)
-            .option(f"parquet.bloom.filter.enabled#{key0}", "true")
-            .partitionBy(*part_cols)
-            .parquet(out_dir)
-        )
-
-        pattern = os.path.join(out_dir, "b=*", "_p=*", "*.parquet") if partitioned \
-            else os.path.join(out_dir, "b=*", "*.parquet")
-        paths = _dedupe_task_attempts(_glob.glob(pattern))
-        if not paths:
-            return []
-
-        table_root = self.path
-        stat_fn = _make_footer_reader(table_root, key0, stat_cols, schema_version)
-        sc = self.spark.sparkContext
-        metas = (
-            sc.parallelize(paths, max(1, min(len(paths), 4 * sc.defaultParallelism)))
-            .map(stat_fn)
-            .collect()
-        )
-        return [DataFile.from_json(m) for m in metas if m is not None]

@@ -1,3 +1,4 @@
+import dataclasses
 import shutil
 import tempfile
 
@@ -18,3 +19,25 @@ def tmpdir_path():
     d = tempfile.mkdtemp(prefix="sparkgraft-")
     yield d
     shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture()
+def legacy_manifest():
+    """Recommit a table's current files as a legacy manifest: the same
+    paths, with no tombstone counts, integral sums or key blooms — the
+    entries ``operators/analyze.analyze`` backfills."""
+
+    def strip(table):
+        fs = table.files()
+        return table.commit(
+            {f.path for f in fs},
+            [
+                dataclasses.replace(
+                    f, tombstones=None, col_sums=None, key_bloom=None
+                )
+                for f in fs
+            ],
+            operation="legacy-manifest",
+        )
+
+    return strip

@@ -1,5 +1,5 @@
-"""ANALYZE backfill (operators/analyze.py): footer-derived (JVM-writer)
-manifests gain exact sums/tombstones/blooms without any data rewrite;
+"""ANALYZE backfill (operators/analyze.py): legacy manifests (no tombstone
+counts, sums or blooms) gain exact ones without any data rewrite;
 stat-cols evolution (set_stat_cols) + analyze lights up range pruning
 and SUM pushdown on tables created without stats."""
 
@@ -33,24 +33,26 @@ def _rows(spark, lo, hi, deletes=()):
     return spark.createDataFrame(rows, DDL)
 
 
-def test_analyze_backfills_jvm_manifests(spark, tmpdir_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_WRITER", "jvm")
+def test_analyze_backfills_legacy_manifests(spark, tmpdir_path, legacy_manifest):
     t = LakeTable.create(
         spark, os.path.join(tmpdir_path, "t"), transcript_schema(),
         n_buckets=4, stat_cols=("turn_idx",), key_bloom_bits=1 << 10,
     )
     merge_into(t, _rows(spark, 0, 100), op_col="op", batch_id="b1")
-    # the footer path cannot prove sums and writes no manifest bloom
+    legacy_manifest(t)
+    # a legacy manifest cannot prove sums and carries no bloom
     assert t.col_sum("turn_idx") is None
     assert all(f.key_bloom is None for f in t.files())
+    paths = {f.path for f in t.files()}
 
     st = analyze(t)
-    assert st.files_analyzed > 0
+    assert st.files_analyzed == len(paths)
     want = t.scan().agg(F.sum("turn_idx")).collect()[0][0]
     assert t.col_sum("turn_idx") == want
     assert all(f.key_bloom is not None for f in t.files())
     assert all((f.col_sums or {}).get("turn_idx") for f in t.files())
-    # state untouched (metadata-swap only)
+    # state untouched (metadata-swap only: same data files)
+    assert {f.path for f in t.files()} == paths
     assert t.count_rows() == t.scan().count() == 100
     # idempotent: nothing deficient remains
     st2 = analyze(t)
@@ -60,13 +62,14 @@ def test_analyze_backfills_jvm_manifests(spark, tmpdir_path, monkeypatch):
     assert len(t.prune_for_keys(["c3"])) < n_all
 
 
-def test_analyze_proves_tombstones_exactly(spark, tmpdir_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_WRITER", "jvm")
+def test_analyze_proves_tombstones_exactly(spark, tmpdir_path, legacy_manifest):
     t = LakeTable.create(
         spark, os.path.join(tmpdir_path, "t"), transcript_schema(), n_buckets=2
     )
     doomed = [("c1", 0), ("c2", 0), ("c3", 3)]
     merge_into(t, _rows(spark, 0, 100, doomed), op_col="op", batch_id="b1")
+    legacy_manifest(t)
+    assert all(f.tombstones is None for f in t.files())
     analyze(t)
     fs = t.files()
     assert all(f.tombstones is not None for f in fs)

@@ -258,10 +258,11 @@ def test_cli_feed_subscription(spark, tmpdir_path, capsys):
     assert _g.glob(f"{tmpdir_path}/out/*.parquet")
 
 
-def test_cli_analyze(spark, tmpdir_path, capsys, monkeypatch):
-    """analyze CLI: stat-cols evolution + backfill through the
-    spark-submit surface (footer-manifest jvm write first)."""
-    monkeypatch.setenv("SPARK_GRAFT_WRITER", "jvm")
+def test_cli_analyze(spark, tmpdir_path, capsys, legacy_manifest):
+    """analyze CLI: stat-cols evolution + backfill of a legacy manifest
+    through the spark-submit surface."""
+    from ds_floodexposure_monitoring_spark.sources.lake import LakeTable
+
     log = f"{tmpdir_path}/log"
     table = f"{tmpdir_path}/t"
     _run(capsys, ["datagen", "--log-dir", log, "--events", "4000",
@@ -269,12 +270,22 @@ def test_cli_analyze(spark, tmpdir_path, capsys, monkeypatch):
     _run(capsys, ["ingest", "--log-dir", log, "--table-dir", table,
                   "--checkpoint-dir", f"{tmpdir_path}/ck", "--mode", "cow",
                   "--n-buckets", "4"])
-    monkeypatch.delenv("SPARK_GRAFT_WRITER")
+    t = LakeTable.load(spark, table)
+    legacy_manifest(t)
+    paths = {f.path for f in t.files()}
     a = _run(capsys, ["analyze", "--table-dir", table,
                       "--stat-cols", "turn_idx"])
-    assert a["stat_cols"] == ["turn_idx"] and a["files_analyzed"] > 0
+    assert a["stat_cols"] == ["turn_idx"] and a["files_analyzed"] == len(paths)
+    t = LakeTable.load(spark, table)
+    assert {f.path for f in t.files()} == paths  # no data rewritten
+    assert all(
+        f.tombstones is not None and (f.col_sums or {}).get("turn_idx")
+        for f in t.files()
+    )
+    assert t.count_rows() == t.scan().count()
     a2 = _run(capsys, ["analyze", "--table-dir", table])
     assert a2["files_analyzed"] == 0  # idempotent
+    assert a2["version"] == a["version"]  # nothing committed
 
 
 def test_cli_maintain(spark, tmpdir_path, capsys):

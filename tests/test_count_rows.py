@@ -91,21 +91,17 @@ def test_time_travel_count(spark, table):
     assert table.count_rows() == 89
 
 
-@pytest.mark.parametrize("mode", ["arrow", "jvm"])
-def test_both_writer_modes_carry_tombstone_counts(
-    spark, tmpdir_path, mode, monkeypatch
-):
-    monkeypatch.setenv("SPARK_GRAFT_WRITER", mode)
+@pytest.mark.parametrize("mode", ["arrow"])  # the Arrow task writer
+def test_both_writer_modes_carry_tombstone_counts(spark, tmpdir_path, mode):
     t = LakeTable.create(
         spark, os.path.join(tmpdir_path, f"t-{mode}"), transcript_schema(),
         n_buckets=4,
     )
     merge_into(t, _rows(spark, 0, 50, [("c1", 1)]), op_col="op", batch_id="b1")
     fs = t.files()
-    # arrow mode counts exactly; jvm mode proves counts from footer
-    # min/max stats (files here are all-live or tombstone-sorted enough
-    # that row groups are uniform at this size — if any file were
-    # unprovable, count_rows falls back and the assert still holds)
+    # the writer counts tombstones exactly, so count_rows needs no scan
+    assert all(f.tombstones is not None for f in fs)
+    assert sum(f.tombstones for f in fs) == 1
     assert t.count_rows() == t.scan().count() == 49
     assert sum(f.rows for f in fs) == 50
 

@@ -20,10 +20,10 @@ ROWS = [
 DDL = "lsn long, conv_id string, turn_idx int, text string"
 
 
-@pytest.mark.parametrize("strategy", ["agg", "window"])
+@pytest.mark.parametrize("strategy", ["agg"])  # the one max_by plan
 def test_dedup_last_writer(spark, strategy):
     df = spark.createDataFrame(ROWS, DDL)
-    out = dedup_last_writer(df, ["conv_id", "turn_idx"], ["lsn"], strategy=strategy)
+    out = dedup_last_writer(df, ["conv_id", "turn_idx"], ["lsn"])
     got = {(r.conv_id, r.turn_idx): (r.lsn, r.text) for r in out.collect()}
     assert got == {("c1", 0): (5, "v5"), ("c1", 1): (7, "v7"), ("c2", 0): (1, "v1")}
 

@@ -167,7 +167,7 @@ def test_decode_feeds_lww_dedup(spark):
     dec = decode_debezium(raw, "value", PAYLOAD).where(~F.col("_corrupt"))
     state = dedup_last_writer(
         dec.drop("_corrupt"), keys=("conv_id", "turn_idx"),
-        order_cols=("_lsn",), strategy="agg",
+        order_cols=("_lsn",),
     )
     alive = {(r.conv_id, r.turn_idx): r.text
              for r in state.where(~F.col("_tombstone")).collect()}

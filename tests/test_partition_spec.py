@@ -65,7 +65,7 @@ def test_writer_splits_files_by_partition_value(spark, table):
     # physical layout mirrors it (b=<bucket>/p=<day>/) and all rows in a
     # file share the partition value
     for f in table.files():
-        assert f"p={f.part}" in f.path or f"_p={f.part}" in f.path
+        assert f"p={f.part}" in f.path
         vals = (
             spark.read.parquet(os.path.join(table.path, f.path))
             .select(F.datediff("ts", F.lit("1970-01-01")).alias("d"))
@@ -158,42 +158,13 @@ def test_null_partition_values_survive_and_never_prune(spark, table):
     merge_into(table, spark.createDataFrame(rows, DDL), batch_id="nulls")
     f = table.files()[0]
     assert f.part is None
-    assert "p=__null__" in f.path or "_p=__HIVE_DEFAULT_PARTITION__" in f.path
+    assert "p=__null__" in f.path
     # null-partition files are kept by every partition prune
     assert table.prune_for_range(
         "ts", dt.datetime(2030, 1, 1), dt.datetime(2031, 1, 1)
     ) == table.files()
     assert table.drop_partitions(dt.datetime(2030, 1, 1)) is None
     assert table.scan().count() == 1
-
-
-def test_jvm_writer_mode_equivalent(spark, tmpdir_path, monkeypatch):
-    """SPARK_GRAFT_WRITER=jvm (Tungsten write + distributed footer
-    stats) produces the same logical state and equivalent manifests as
-    the default arrow task writer, on a partitioned table."""
-    monkeypatch.setenv("SPARK_GRAFT_WRITER", "jvm")
-    t = LakeTable.create(
-        spark, os.path.join(tmpdir_path, "jvmw"), transcript_schema(),
-        n_buckets=4, partition_by="days(ts)", stat_cols=("ts",),
-    )
-    b = _batch(spark, 0, 40, 1).union(_batch(spark, 100, 40, 2))
-    merge_into(t, b, batch_id="seed")
-    merge_append(t, _batch(spark, 5000, 20, 2, text="d2"), batch_id="d2")
-    files = t.files()
-    assert {f.part for f in files} == {19723, 19724}
-    assert all(f.min_key is not None and f.max_key is not None for f in files)
-    assert all((f.col_stats or {}).get("ts") for f in files)
-    assert t.scan().count() == 100
-    monkeypatch.setenv("SPARK_GRAFT_WRITER", "arrow")
-    want = sorted((r.conv_id, r.turn_idx, r.text) for r in t.scan().collect())
-    # a later arrow-mode write interoperates on the same table
-    merge_into(t, _batch(spark, 9000, 10, 3, text="arrow"), batch_id="a1")
-    assert t.scan().count() == 110
-    got = sorted(
-        (r.conv_id, r.turn_idx, r.text)
-        for r in t.scan().where(~F.col("text").startswith("arrow")).collect()
-    )
-    assert got == want
 
 
 def test_months_partition_non_utc_session(spark, tmpdir_path):
